@@ -1,38 +1,55 @@
-"""Distributed graph analytics beyond traversal: triangle counting and
-PageRank.
+"""Distributed graph analytics beyond traversal: ranking (PageRank,
+personalized PageRank, HITS), BFS distances, path counts and the
+centralities built on them, walks, k-core peeling, communities, SCC,
+link prediction, triangles and clustering, HyperBall.
 
-Complements the engine's BFS (traverse.py) and connected components
-(canonicalize.py) with the other classic distributed graph primitives.
+Complements the engine's typed BFS (traverse.py) and connected components
+(canonicalize.py). Operators that share an iteration shape run it on one
+private core each: `_power_iteration` (pagerank, personalized_pagerank),
+`_frontier_levels` (the BFS family here and traverse.find_nodes_by_node_type)
+and `_wedge_closure` (triangle_count, local_clustering, graph_summary).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def triangle_count(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame:
-    """Global triangle count via degree-ordered wedge join
-    (Schank-Wagner orientation) — 1-row DataFrame (n_triangles).
-
-    Naive wedge enumeration joins on every shared vertex: a hub with
-    degree d contributes d² wedges, which detonates on skewed graphs.
-    Orienting every edge from its lower-degree endpoint to the higher
-    (ties by id) makes each triangle countable at exactly one vertex
-    — its lowest-degree corner — and caps per-vertex wedge fanout at
-    the oriented out-degree, O(sqrt(E)) on any graph. Three shuffles:
-    degree aggregation, the wedge self-join on the oriented source,
-    and the closure probe against the canonical edge set.
-    """
-    und = (
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected edge set (u, v) with u < v: self-loops
+    dropped, reversed and duplicate edges collapsed. Not checkpointed —
+    callers pick eager or lazy by how they consume it."""
+    return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
             F.greatest(F.col(src), F.col(dst)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)  # reused: degrees, orientation, closure
     )
+
+
+def _wedge_closure(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame]:
+    """Every triangle exactly once, by degree-ordered wedge closure
+    (Schank-Wagner orientation) → (deg, tri): deg is (n, d) over the
+    undirected graph, tri is (c0, c1, c2), the triangle's corners.
+
+    Naive wedge enumeration joins on every shared vertex: a hub with
+    degree d contributes d² wedges, which detonates on skewed graphs.
+    Orienting every edge from its lower-degree endpoint to the higher
+    (ties by id) makes each triangle countable at exactly one vertex
+    — its lowest-degree corner c0 — and caps per-vertex wedge fanout at
+    the oriented out-degree, O(sqrt(E)) on any graph. Three shuffles:
+    degree aggregation, the wedge self-join on the oriented source,
+    and the closure probe against the canonical edge set.
+    """
+    # reused: degrees, orientation, closure
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
     deg = (
         und.select(F.col("u").alias("n"))
         .unionAll(und.select(F.col("v").alias("n")))
@@ -60,15 +77,33 @@ def triangle_count(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFram
     )
     e1 = oriented.alias("e1")
     e2 = oriented.alias("e2")
-    wedges = e1.join(
-        e2.hint("shuffle_hash"),
-        (F.col("e1.s") == F.col("e2.s")) & (F.col("e1.t") < F.col("e2.t")),
-    ).select(F.col("e1.t").alias("x"), F.col("e2.t").alias("y"))
-    closed = wedges.join(
-        und.hint("shuffle_hash"),
-        (F.least("x", "y") == F.col("u")) & (F.greatest("x", "y") == F.col("v")),
+    tri = (
+        e1.join(
+            e2.hint("shuffle_hash"),
+            (F.col("e1.s") == F.col("e2.s")) & (F.col("e1.t") < F.col("e2.t")),
+        )
+        .select(
+            F.col("e1.s").alias("c0"),
+            F.col("e1.t").alias("c1"),
+            F.col("e2.t").alias("c2"),
+        )
+        # c1 < c2 by the wedge condition, so (c1, c2) is already the
+        # canonical (u, v) of the closing edge
+        .join(
+            und.hint("shuffle_hash"),
+            (F.col("c1") == F.col("u")) & (F.col("c2") == F.col("v")),
+        )
+        .select("c0", "c1", "c2")
     )
-    return closed.groupBy().agg(F.count("*").alias("n_triangles"))
+    return deg, tri
+
+
+def triangle_count(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame:
+    """Global triangle count — 1-row DataFrame (n_triangles) — over the
+    degree-ordered wedge closure (`_wedge_closure`: hub-safe, three
+    shuffles)."""
+    _, tri = _wedge_closure(edges, src, dst)
+    return tri.groupBy().agg(F.count("*").alias("n_triangles"))
 
 
 def k_core(
@@ -93,15 +128,7 @@ def k_core(
     chains, so a non-converged loop RAISES instead of silently
     returning a non-core superset — raise max_iter for pathological
     chains. Returns (node)."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=True)
     n_edges = e.count()
     converged = n_edges == 0
     for _ in range(max_iter):
@@ -145,24 +172,11 @@ def k_core(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Directed PageRank → (node, rank), sum(rank) = 1.
-
-    Per iteration: one join of ranks onto the (pre-materialized)
-    out-degree edge list, one aggregation of contributions per target.
-    Dangling nodes (no out-edges) redistribute their mass uniformly —
-    the mass is a 1-row AGGREGATE folded into the round's plan via a
-    broadcast cross join (never collected: one Spark job per round,
-    not a driver round-trip plus a job). Each round eagerly
-    localCheckpoints to truncate lineage, so the plan stays O(1) deep
-    across max_iter rounds (the property that lets the loop run on a
-    billion-edge graph without a 20-level join tower)."""
+def _directed_graph(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame]:
+    """(e, nodes) for the power iteration: the distinct (s, t) edge
+    list and its node set (node), eagerly checkpointed."""
     # e feeds nodes (twice), outdeg AND links across several setup
     # actions — materialize once or the caller's edge lineage (e.g.
     # the cosupply self-join) re-executes per consumer (r07: 4x)
@@ -175,17 +189,39 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n = nodes.count()
+    return e, nodes
+
+
+def _power_iteration(
+    e: DataFrame,
+    nodes: DataFrame,
+    base: DataFrame,
+    damping: float,
+    max_iter: int,
+) -> DataFrame:
+    """The PageRank power iteration → (node, rank), sum(rank) = 1.
+
+    `e` (s, t) and `nodes` come from `_directed_graph`; `base` (node, p)
+    is the restart distribution over `nodes` (sum p = 1): teleport AND
+    dangling mass restart at p, and the iteration starts from it.
+
+    Per round: one join of ranks onto the (pre-materialized)
+    out-degree edge list, one aggregation of contributions per target.
+    The dangling mass is a 1-row AGGREGATE folded into the round's plan
+    via a broadcast cross join — never collected, so a round costs no
+    driver round-trip (under AQE its shuffle stages still run as
+    several Spark jobs). Each round eagerly localCheckpoints to
+    truncate lineage, so the plan stays O(1) deep across max_iter
+    rounds (the property that lets the loop run on a billion-edge
+    graph without a 20-level join tower)."""
     outdeg = e.groupBy("s").agg(F.count("*").alias("od"))
     # (s, t, od) reused every round
     links = e.join(outdeg.hint("shuffle_hash"), "s").localCheckpoint(eager=True)
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-        eager=True
-    )
     has_out = links.select(F.col("s").alias("node")).distinct()
     dangling_nodes = nodes.join(
         has_out.hint("shuffle_hash"), "node", "left_anti"
-    ).localCheckpoint(
+    ).localCheckpoint(eager=True)
+    ranks = base.select("node", F.col("p").alias("rank")).localCheckpoint(
         eager=True
     )
     for _ in range(max_iter):
@@ -198,24 +234,43 @@ def pagerank(
             # shuffle_hash: links is edge-scale, ranks node-scale, both
             # stats-less checkpoints — no-stats broadcast = driver OOM
             links.join(ranks.hint("shuffle_hash"), links.s == ranks.node)
-            .select(F.col("t").alias("node"), (F.col("rank") / F.col("od")).alias("c"))
+            .select(
+                F.col("t").alias("node"), (F.col("rank") / F.col("od")).alias("c")
+            )
             .groupBy("node")
             .agg(F.sum("c").alias("c"))
         )
         ranks = (
-            nodes.join(contribs.hint("shuffle_hash"), "node", "left")
+            base.join(contribs.hint("shuffle_hash"), "node", "left")
             .crossJoin(F.broadcast(dm))  # 1-row aggregate, stays in-plan
             .select(
                 "node",
                 (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("_dm") / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce("c", F.lit(0.0))
+                    F.lit(1.0 - damping) * F.col("p")
+                    + F.lit(damping)
+                    * (F.col("_dm") * F.col("p") + F.coalesce("c", F.lit(0.0)))
                 ).alias("rank"),
             )
             .localCheckpoint(eager=True)
         )
     return ranks
+
+
+def pagerank(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    damping: float = 0.85,
+    max_iter: int = 20,
+) -> DataFrame:
+    """Directed PageRank → (node, rank), sum(rank) = 1: the
+    uniform-restart case of `_power_iteration` (every node restarts at
+    1/n). Dangling nodes (no out-edges) redistribute their mass
+    uniformly."""
+    e, nodes = _directed_graph(edges, src, dst)
+    n = nodes.count()
+    base = nodes.select("node", F.lit(1.0 / n).alias("p"))
+    return _power_iteration(e, nodes, base, damping, max_iter)
 
 
 def label_propagation(
@@ -297,16 +352,11 @@ def personalized_pagerank(
     `seeds` is a single-column DataFrame of node ids (scale path —
     millions of seeds stay distributed) or a Python list (serving
     convenience). Seeds not present in the graph would silently leak
-    restart mass, so they raise. Same per-round shape as `pagerank`:
-    one join + one aggregation, dangling mass as an in-plan broadcast
-    1-row aggregate, eager localCheckpoint keeping the plan O(1) deep.
+    restart mass, so they raise. The rounds are `_power_iteration`'s,
+    with the seed distribution as its restart table.
     """
     spark = edges.sparkSession
-    # materialized once: nodes (two branches), outdeg and links all
-    # consume e across separate setup actions (r07 — see pagerank)
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t")
-    ).distinct().localCheckpoint(eager=False)
+    e, nodes = _directed_graph(edges, src, dst)
     if not isinstance(seeds, DataFrame):
         if not seeds:
             raise ValueError("seeds must be non-empty")
@@ -320,12 +370,6 @@ def personalized_pagerank(
     n_seeds = sd.count()
     if n_seeds == 0:
         raise ValueError("seeds must be non-empty")
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("t").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     if nodes.join(sd, "node", "left_semi").count() != n_seeds:
         raise ValueError(
             "some seeds are not nodes of the graph — their restart mass "
@@ -337,47 +381,7 @@ def personalized_pagerank(
         .select("node", F.coalesce("_p", F.lit(0.0)).alias("p"))
         .localCheckpoint(eager=True)
     )
-    outdeg = e.groupBy("s").agg(F.count("*").alias("od"))
-    links = e.join(outdeg.hint("shuffle_hash"), "s").localCheckpoint(eager=True)
-    has_out = links.select(F.col("s").alias("node")).distinct()
-    dangling_nodes = nodes.join(
-        has_out.hint("shuffle_hash"), "node", "left_anti"
-    ).localCheckpoint(
-        eager=True
-    )
-    ranks = base.select("node", F.col("p").alias("rank")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(max_iter):
-        dm = (
-            ranks.join(dangling_nodes.hint("shuffle_hash"), "node")
-            .groupBy()
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
-        )
-        contribs = (
-            # shuffle_hash: links is edge-scale, ranks node-scale, both
-            # stats-less checkpoints — no-stats broadcast = driver OOM
-            links.join(ranks.hint("shuffle_hash"), links.s == ranks.node)
-            .select(
-                F.col("t").alias("node"), (F.col("rank") / F.col("od")).alias("c")
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        ranks = (
-            base.join(contribs.hint("shuffle_hash"), "node", "left")
-            .crossJoin(F.broadcast(dm))  # 1-row aggregate, stays in-plan
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (F.col("_dm") * F.col("p") + F.coalesce("c", F.lit(0.0)))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    return _power_iteration(e, nodes, base, damping, max_iter)
 
 
 def link_prediction(
@@ -415,15 +419,8 @@ def link_prediction(
     with uncapped unions.  All other shuffles are key-local
     aggregations and broadcast-size degree joins.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: nbrs, degrees, anti-join
-    )
+    # reused: nbrs, degrees, anti-join
+    und = _undirected(edges, src, dst).localCheckpoint(eager=False)
     nbrs = und.select(F.col("u").alias("n"), F.col("v").alias("z")).unionAll(
         und.select(F.col("v").alias("n"), F.col("u").alias("z"))
     )
@@ -517,6 +514,76 @@ def _adjacency(
     return adj.localCheckpoint(eager=False)
 
 
+def _frontier_levels(
+    level0: DataFrame, keys: list[str], step, max_hops: int
+) -> list[DataFrame]:
+    """The level-synchronous frontier loop → [level0, level1, …]:
+    step(level, hop) expands the previous level into candidate rows for
+    `hop`, the rows whose `keys` an earlier level already holds are
+    anti-joined away, and the rest become the next level — eagerly
+    localCheckpointed, which keeps the plan O(1) deep across hops. The
+    loop stops at the first empty level (one bounded take per hop —
+    the same driver-side loop-control cost as k-core peeling,
+    amortized at real scale by hop width) or after max_hops.
+
+    The visited set stays a UNION of the checkpointed levels instead
+    of a re-checkpointed growing table: one eager checkpoint per hop,
+    not two — at toy scale the saved action is the dominant cost, at
+    scale the saved pass over the accumulated table is. The anti-join
+    tolerates duplicates, so the union needs no per-hop distinct."""
+    levels = [level0]
+    for hop in range(1, max_hops + 1):
+        visited = reduce(DataFrame.unionAll, [lv.select(*keys) for lv in levels])
+        nxt = (
+            step(levels[-1], hop)
+            # shuffle_hash: both sides grow with the traversal and are
+            # stats-less checkpoints — no-stats broadcast = driver OOM
+            .join(visited.hint("shuffle_hash"), keys, "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        if not nxt.take(1):
+            break
+        levels.append(nxt)
+    return levels
+
+
+def _bfs_distances(
+    edges: DataFrame,
+    seeds: DataFrame,
+    src: str,
+    dst: str,
+    max_hops: int,
+    directed: bool,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """BFS distances from the 1-column `seeds` on `_frontier_levels` →
+    the union of the levels, (*carry, node, dist). Each carry column
+    starts as the seed id and rides the frontier unchanged, so
+    carry=("source",) keeps every seed's distances apart and carry=()
+    measures from the seed SET. Per hop one equi-join frontier→edges
+    plus the visited anti-join."""
+    adj = _adjacency(edges, src, dst, directed)
+    level0 = (
+        seeds.select(F.col(seeds.columns[0]).alias("node"))
+        .distinct()
+        .select(
+            *[F.col("node").alias(c) for c in carry], "node", F.lit(0).alias("dist")
+        )
+        .localCheckpoint(eager=True)
+    )
+
+    def step(level: DataFrame, hop: int) -> DataFrame:
+        return (
+            level.join(adj.hint("shuffle_hash"), level.node == adj.u)
+            .select(*carry, F.col("v").alias("node"))
+            .distinct()
+            .withColumn("dist", F.lit(hop))
+        )
+
+    levels = _frontier_levels(level0, [*carry, "node"], step, max_hops)
+    return reduce(DataFrame.unionAll, levels)
+
+
 def shortest_paths(
     edges: DataFrame,
     seeds: DataFrame,
@@ -528,51 +595,12 @@ def shortest_paths(
     """Single-source(-set) BFS shortest-path lengths: (node, dist) for
     every node reachable from `seeds` (a 1-column DataFrame of node
     ids — an expression, never a driver list, so seed selection stays
-    in-plan at any scale) within max_hops.
-
-    The level-synchronous frontier loop the engine's typed BFS
-    (traverse.py:59, the reference's hierarchy walks) specializes:
-    per hop one equi-join frontier→edges plus one anti-join against
-    the visited set, eager localCheckpoint keeps the plan O(1) deep
-    across hops, and the loop exits early on an empty frontier (one
-    bounded count per hop — the same driver-side loop-control cost as
-    BFS/PageRank/k-core, amortized at real scale by hop width).
+    in-plan at any scale) within max_hops — `_frontier_levels`, the
+    level-synchronous loop the engine's typed BFS
+    (traverse.find_nodes_by_node_type, the reference's hierarchy walks)
+    also runs on.
     """
-    adj = _adjacency(edges, src, dst, directed)
-    seed_col = seeds.columns[0]
-    dist0 = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    # visited stays a UNION of the per-hop checkpointed levels (the
-    # traverse.py pattern) instead of a re-checkpointed growing table:
-    # one eager checkpoint per hop, not two — at toy scale the saved
-    # action is the dominant cost, at scale the saved pass over the
-    # accumulated distance table is
-    levels = [dist0]
-    frontier = dist0.select("node")
-    for hop in range(1, max_hops + 1):
-        visited = levels[0].select("node")
-        for lv in levels[1:]:
-            visited = visited.unionAll(lv.select("node"))
-        nxt = (
-            frontier.join(adj.hint("shuffle_hash"), frontier.node == adj.u)
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(visited.hint("shuffle_hash"), "node", "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .localCheckpoint(eager=True)
-        )
-        if not nxt.take(1):
-            break
-        levels.append(nxt)
-        frontier = nxt.select("node")
-    dist = levels[0]
-    for lv in levels[1:]:
-        dist = dist.unionAll(lv)
-    return dist
+    return _bfs_distances(edges, seeds, src, dst, max_hops, directed)
 
 
 def random_walks(
@@ -594,9 +622,10 @@ def random_walks(
     out-neighbor.
 
     Returns (walk_id, step, node); walk_id is the seed node.  Each
-    step is one frontier-join + one per-walk window (rank over the
-    candidate neighbors) with an eager localCheckpoint — O(1) plan
-    depth, the engine's standard iterative shape (BFS/PageRank/CC).
+    step is one frontier-join + one per-walk min_by aggregation (the
+    hash argmin over the candidate neighbors) with an eager
+    localCheckpoint — O(1) plan depth, the engine's standard iterative
+    shape (BFS/PageRank/CC).
     The per-step frontier is seed-table-sized, not graph-sized.
     """
     adj = _adjacency(edges, src, dst, directed)
@@ -660,41 +689,9 @@ def multi_source_distances(
     just k× wider) — the right shape when the per-stage latency, not
     bandwidth, dominates (it does for BFS loops).
     """
-    adj = _adjacency(edges, src, dst, directed)
-    s = sources.columns[0]
-    dist0 = (
-        sources.select(F.col(s).alias("source"))
-        .distinct()
-        .select(
-            "source", F.col("source").alias("node"), F.lit(0).alias("dist")
-        )
-        .localCheckpoint(eager=True)
+    return _bfs_distances(
+        edges, sources, src, dst, max_hops, directed, carry=("source",)
     )
-    # one eager checkpoint per hop (see shortest_paths): the visited
-    # set is a union of the per-hop checkpointed levels, never a
-    # re-checkpointed growing table
-    levels = [dist0]
-    frontier = dist0.select("source", "node")
-    for hop in range(1, max_hops + 1):
-        visited = levels[0].select("source", "node")
-        for lv in levels[1:]:
-            visited = visited.unionAll(lv.select("source", "node"))
-        nxt = (
-            frontier.join(adj.hint("shuffle_hash"), frontier.node == adj.u)
-            .select("source", F.col("v").alias("node"))
-            .distinct()
-            .join(visited.hint("shuffle_hash"), ["source", "node"], "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .localCheckpoint(eager=True)
-        )
-        if not nxt.take(1):
-            break
-        levels.append(nxt)
-        frontier = nxt.select("source", "node")
-    dist = levels[0]
-    for lv in levels[1:]:
-        dist = dist.unionAll(lv)
-    return dist
 
 
 def closeness_centrality(
@@ -753,11 +750,9 @@ def closeness_centrality(
                     "all-pairs screen deliberately."
                 )
     # closeness uses distances d(u, v) for u reaching v: BFS from v on
-    # the REVERSED graph enumerates exactly those u
-    rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
+    # the REVERSED graph (src and dst swapped) enumerates exactly those u
     d = multi_source_distances(
-        rev, bfs_from, src="src", dst="dst", max_hops=max_hops,
-        directed=directed,
+        edges, bfs_from, src=dst, dst=src, max_hops=max_hops, directed=directed
     )
     agg = d.groupBy("source").agg(
         F.count("*").alias("r"), F.sum("dist").alias("sum_d")
@@ -870,14 +865,15 @@ def shortest_path_counts(
     directed: bool = True,
 ) -> DataFrame:
     """(source, node, dist, sigma): BFS distance AND number of
-    shortest paths from every source — multi_source_distances' loop
-    with a count riding the frontier: new nodes at level d+1 aggregate
-    sigma over their level-d predecessors (the Brandes forward pass,
-    level-synchronous).  sigma(source, source) = 1 at dist 0.
+    shortest paths from every source — `_frontier_levels` on the
+    (source, node) key, as multi_source_distances, with a count riding
+    the frontier: new nodes at level d+1 aggregate sigma over their
+    level-d predecessors (the Brandes forward pass, level-synchronous).
+    sigma(source, source) = 1 at dist 0.
     """
     adj = _adjacency(edges, src, dst, directed)
     s = sources.columns[0]
-    state = (
+    level0 = (
         sources.select(F.col(s).alias("source"))
         .distinct()
         .select(
@@ -888,24 +884,17 @@ def shortest_path_counts(
         )
         .localCheckpoint(eager=True)
     )
-    visited = state.select("source", "node")
-    frontier = state
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(adj.hint("shuffle_hash"), frontier.node == adj.u)
+
+    def step(level: DataFrame, hop: int) -> DataFrame:
+        return (
+            level.join(adj.hint("shuffle_hash"), level.node == adj.u)
             .groupBy("source", F.col("v").alias("node"))
             .agg(F.sum("sigma").alias("sigma"))
-            .join(visited.hint("shuffle_hash"), ["source", "node"], "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .select("source", "node", "dist", "sigma")
-            .localCheckpoint(eager=True)
+            .select("source", "node", F.lit(hop).alias("dist"), "sigma")
         )
-        if not nxt.take(1):
-            break
-        state = state.unionAll(nxt).localCheckpoint(eager=True)
-        visited = state.select("source", "node")
-        frontier = nxt
-    return state
+
+    levels = _frontier_levels(level0, ["source", "node"], step, max_hops)
+    return reduce(DataFrame.unionAll, levels)
 
 
 def betweenness_centrality(
@@ -982,27 +971,20 @@ def betweenness_centrality(
             edges, nodes, src=src, dst=dst, max_hops=max_hops,
             directed=directed,
         ).localCheckpoint(eager=True)
-        a = sp.select(
-            F.col("source").alias("s"),
-            F.col("node").alias("v"),
-            F.col("dist").alias("d_sv"),
-            F.col("sigma").alias("sig_sv"),
-        )
-        b = sp.select(
-            F.col("source").alias("v"),
-            F.col("node").alias("t"),
-            F.col("dist").alias("d_vt"),
-            F.col("sigma").alias("sig_vt"),
-        )
-        c = sp.select(
-            F.col("source").alias("s"),
-            F.col("node").alias("t"),
-            F.col("dist").alias("d_st"),
-            F.col("sigma").alias("sig_st"),
-        )
+
+        def leg(x: str, y: str) -> DataFrame:
+            # the σ-table as (x, y, d_xy, sig_xy)
+            return sp.select(
+                F.col("source").alias(x),
+                F.col("node").alias(y),
+                F.col("dist").alias(f"d_{x}{y}"),
+                F.col("sigma").alias(f"sig_{x}{y}"),
+            )
+
         dep = (
-            a.join(b.hint("shuffle_hash"), "v")
-            .join(c.hint("shuffle_hash"), ["s", "t"])
+            leg("s", "v")
+            .join(leg("v", "t").hint("shuffle_hash"), "v")
+            .join(leg("s", "t").hint("shuffle_hash"), ["s", "t"])
             .where(
                 (F.col("s") != F.col("v"))
                 & (F.col("t") != F.col("v"))
@@ -1098,67 +1080,20 @@ def local_clustering(
     edges: DataFrame, src: str = "a", dst: str = "b"
 ) -> DataFrame:
     """Per-node triangle count + local clustering coefficient
-    lcc(v) = 2·T(v) / (deg(v)·(deg(v)−1)) — triangle_count's
-    degree-ordered wedge join kept per-triangle instead of folded to
-    one global count: each closed wedge (s; x, y) IS one triangle
-    {s, x, y}, found exactly once thanks to the orientation, then
-    exploded to its three corners and counted per node.  Same three
-    shuffles as triangle_count plus the corner aggregation; deg < 2
-    nodes get lcc 0.
+    lcc(v) = 2·T(v) / (deg(v)·(deg(v)−1)) — triangle_count's wedge
+    closure kept per-triangle instead of folded to one global count:
+    each triangle (c0, c1, c2) is found exactly once thanks to the
+    orientation, then exploded to its three corners and counted per
+    node.  Same three shuffles as triangle_count plus the corner
+    aggregation; deg < 2 nodes get lcc 0.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("u").alias("n"))
-        .unionAll(und.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=False)  # feeds BOTH endpoint joins
-    )
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    # shuffle_hash: same no-stats broadcast hazard as triangle_count
-    oriented = (
-        und.join(du.hint("shuffle_hash"), "u")
-        .join(dv.hint("shuffle_hash"), "v")
-        .select(
-            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    e1 = oriented.alias("e1")
-    e2 = oriented.alias("e2")
-    tri = (
-        e1.join(
-            e2.hint("shuffle_hash"),
-            (F.col("e1.s") == F.col("e2.s")) & (F.col("e1.t") < F.col("e2.t")),
-        )
-        .select(
-            F.col("e1.s").alias("c0"),
-            F.col("e1.t").alias("c1"),
-            F.col("e2.t").alias("c2"),
-        )
-        .join(
-            und.hint("shuffle_hash"),
-            (F.least("c1", "c2") == F.col("u"))
-            & (F.greatest("c1", "c2") == F.col("v")),
-        )
-        .select(F.explode(F.array("c0", "c1", "c2")).alias("n"))
+    deg, tri = _wedge_closure(edges, src, dst)
+    per_node = (
+        tri.select(F.explode(F.array("c0", "c1", "c2")).alias("n"))
         .groupBy("n")
         .agg(F.count("*").alias("triangles"))
     )
-    return deg.join(tri.hint("shuffle_hash"), "n", "left").select(
+    return deg.join(per_node.hint("shuffle_hash"), "n", "left").select(
         F.col("n").alias("node"),
         F.coalesce("triangles", F.lit(0)).cast("bigint").alias("triangles"),
         F.when(
@@ -1230,22 +1165,9 @@ def graph_summary(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame
     KG build: n_nodes, n_edges (undirected, deduped), avg/max degree,
     triangle count, open-wedge count and the global clustering
     coefficient 3·triangles / wedges.  Degree stats are one
-    aggregation; triangles reuse the degree-ordered wedge join."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("u").alias("n"))
-        .unionAll(und.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("d"))
-    )
+    aggregation over the wedge closure's own degree table; triangles
+    are its closed wedges."""
+    deg, tri = _wedge_closure(edges, src, dst)
     stats = deg.agg(
         F.count("*").alias("n_nodes"),
         (F.sum("d") / 2).cast("bigint").alias("n_edges"),
@@ -1254,7 +1176,7 @@ def graph_summary(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame
         # wedges (paths of length 2 centered anywhere) = Σ C(d, 2)
         F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("bigint").alias("_wedges"),
     )
-    tri = triangle_count(und, src="u", dst="v")
+    tri = tri.groupBy().agg(F.count("*").alias("n_triangles"))
     return stats.crossJoin(F.broadcast(tri)).select(
         "n_nodes",
         "n_edges",
@@ -1387,8 +1309,6 @@ def hyperball(
             if cur == prev:
                 break
             prev = cur
-
-    from functools import reduce
 
     return reduce(DataFrame.unionAll, out)
 

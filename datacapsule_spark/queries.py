@@ -30,11 +30,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression work onto one core, so a repartition is bought once; a
     real corpus has >= defaultParallelism splits and pays nothing here
     (no unconditional Exchange — asserted in tests/test_plans.py)."""
-    d = _t(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() >= par:
-        return d
-    return d.repartition(par, "doc_id")
+    return _spread(spark, _t(spark, sf_dir, "documents"), "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -1490,8 +1486,8 @@ def dedup_containment_docs(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def _spread(spark, df, *keys):
-    """Conditionally repartition a narrow scan over the cluster — the
-    _docs pattern: only when the input has fewer splits than
+    """Conditionally repartition a narrow scan over the cluster (see
+    _docs): only when the input has fewer splits than
     defaultParallelism (the single-file testdata), so a real corpus
     with enough splits pays no Exchange."""
     par = spark.sparkContext.defaultParallelism

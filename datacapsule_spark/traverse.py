@@ -6,8 +6,9 @@ NetworkX walk (react_tools.py:80-210):
 - NODE_HIERARCHY (react_tools.py:19-40) becomes a broadcast literal
   map; for the code KG the ranks follow the containment taxonomy
   repo(1) → dir(2) → file(3) → symbol/module(4) → leaf attrs(5).
-- find_nodes_by_node_type = iterative BFS: each round joins the
-  frontier to the bidirectional edge list, applies the rank-
+- find_nodes_by_node_type = iterative BFS on graph_stats'
+  level-synchronous frontier loop (`_frontier_levels`): each round joins
+  the frontier to the bidirectional edge list, applies the rank-
   monotonicity pruning predicate (pushed below the join by Catalyst),
   anti-joins the visited set, and localCheckpoints to truncate lineage.
 - The batch variant (G2) seeds the frontier with (query_id, node) rows —
@@ -22,8 +23,12 @@ the visited anti-join guards cycles introduced by canonicalization.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .operators.graph_stats import _frontier_levels
 
 # Containment-taxonomy ranks for the code KG (analogue of
 # NODE_HIERARCHY, react_tools.py:19-40: 界=1 … 种=7, attributes=8).
@@ -94,30 +99,19 @@ def find_nodes_by_node_type(
     # materialized once per traversal; reused every hop
     bedges = bidirectional_edges(edges).localCheckpoint(eager=False)
 
-    frontier = (
+    level0 = (
         start_nodes.select("query_id", "node_id")
         .distinct()
-        .join(typed.select("node_id", "rank"), "node_id")
-        .select("query_id", "node_id", "rank")
-    )
-    hits = (
-        frontier.join(
-            typed.where(F.col("node_type") == target_type).select("node_id"),
-            "node_id",
-            "inner",
-        ).select("query_id", "node_id")
+        .join(typed, "node_id")
+        .select("query_id", "node_id", "node_type", "rank")
     )
     start_ranks = (
-        frontier.groupBy("query_id")
+        level0.groupBy("query_id")
         .agg(F.min("rank").alias("start_rank"))
         .localCheckpoint(eager=False)  # broadcast every hop; tiny
     )
 
-    # visited kept as a list of checkpointed frontiers: the anti-join
-    # target tolerates duplicates, so no per-round distinct shuffle
-    visited_frontiers = [frontier.select("query_id", "node_id")]
-
-    for _ in range(max_hops):
+    def step(frontier: DataFrame, hop: int) -> DataFrame:
         # per-hop rank monotonicity (react_tools.py:158-176 direction
         # rules): each hop must move weakly toward the target rank
         # RELATIVE TO THE CURRENT node, and never past the target.
@@ -125,7 +119,7 @@ def find_nodes_by_node_type(
         # THROUGH shared deeper nodes (a symbol used by two repos) and
         # re-ascending into a different subtree; the per-hop rule stops
         # down-then-up wandering inside the allowed range.
-        expanded = (
+        return (
             frontier.join(
                 bedges.hint("shuffle_hash"), frontier.node_id == bedges.from_id
             )
@@ -147,31 +141,16 @@ def find_nodes_by_node_type(
             .groupBy("query_id", "node_id", "node_type")
             .agg(F.min("rank").alias("rank"))
         )
-        visited = visited_frontiers[0]
-        for vf in visited_frontiers[1:]:
-            visited = visited.union(vf)
-        frontier = (
-            expanded.select("query_id", "node_id", "node_type", "rank")
-            .join(visited, ["query_id", "node_id"], "left_anti")
-            .localCheckpoint(eager=True)  # truncate lineage + terminate check
-        )
-        if frontier.isEmpty():
-            break
-        visited_frontiers.append(frontier.select("query_id", "node_id"))
-        # target hits come off the CHECKPOINTED frontier, not `expanded`:
-        # accumulating from expanded re-executed each hop's full
-        # expansion join tree once more when the final union was
-        # evaluated (r07). Equivalent: the first time a (query_id,
-        # target node) pair is reached it survives the anti-join into
-        # the frontier; start nodes of the target type are in the
-        # initial `hits`.
-        hits = hits.union(
-            frontier.where(F.col("node_type") == target_type).select(
-                "query_id", "node_id"
-            )
-        )
 
-    return hits.distinct()
+    levels = _frontier_levels(level0, ["query_id", "node_id"], step, max_hops)
+    # target hits come off the CHECKPOINTED levels, not the expansion:
+    # accumulating from the expansion re-executed each hop's full join
+    # tree once more when the final union was evaluated (r07).
+    # Equivalent: the first time a (query_id, target node) pair is
+    # reached it survives the anti-join into a level; start nodes of
+    # the target type are in level0.
+    hits = reduce(DataFrame.union, levels).where(F.col("node_type") == target_type)
+    return hits.select("query_id", "node_id").distinct()
 
 
 def get_node_attribute(nodes: DataFrame, node_id: str) -> DataFrame:

@@ -479,9 +479,9 @@ def test_argmin_round_bodies_window_free(spark):
     captured = []
     orig = CDF.localCheckpoint
 
-    def capturing(self, eager=True):
+    def capturing(self, *args, **kwargs):
         captured.append(explain_report(self))
-        return orig(self, eager=eager)
+        return orig(self, *args, **kwargs)
 
     CDF.localCheckpoint = capturing
     try:
@@ -492,6 +492,43 @@ def test_argmin_round_bodies_window_free(spark):
     assert captured
     bad = [c.text for c in captured if c.windows]
     assert not bad, "\n".join(bad)
+
+
+def test_shortest_path_counts_one_checkpoint_per_hop(spark):
+    """shortest_path_counts runs on the shared frontier loop: one eager
+    localCheckpoint per hop (the new level, which also feeds the
+    emptiness probe) plus one for the source level. The visited set and
+    the result are unions of the levels — re-checkpointing the growing
+    (source, node, dist, sigma) table every hop would double the
+    per-hop actions."""
+    from pyspark.sql.classic.dataframe import DataFrame as CDF
+
+    from datacapsule_spark.operators.graph_stats import shortest_path_counts
+
+    # two shortest paths 0->1->3 and 0->2->3, then 3->4: levels at hops
+    # 1..3, and hop 4 finds the empty level that stops the loop
+    edges = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4)], "src long, dst long"
+    )
+    sources = spark.createDataFrame([(0,)], "s long")
+    eager = []
+    orig = CDF.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        eager.append(args[0] if args else kwargs.get("eager", True))
+        return orig(self, *args, **kwargs)
+
+    CDF.localCheckpoint = counting
+    try:
+        out = shortest_path_counts(edges, sources, max_hops=10)
+    finally:
+        CDF.localCheckpoint = orig
+    got = {(r["node"], r["dist"], r["sigma"]) for r in out.collect()}
+    assert got == {
+        (0, 0, 1.0), (1, 1, 1.0), (2, 1, 1.0), (3, 2, 2.0), (4, 3, 2.0)
+    }
+    hops = 4
+    assert sum(map(bool, eager)) == 1 + hops, eager
 
 
 def test_tokenizer_pairs_topk_and_pruning(spark):
